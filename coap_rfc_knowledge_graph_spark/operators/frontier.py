@@ -111,7 +111,9 @@ def schedule_fetches(
     adds ``fetch_at_ms`` — the host-relative fetch offset spacing
     requests ``delay_millis`` apart in priority order (the de-facto
     Crawl-delay contract; see ``robots.parse_crawl_delays``). Hosts
-    absent from ``delays`` use ``default_delay_ms``.
+    absent from ``delays`` use ``default_delay_ms``; a host with several
+    delay rows (e.g. re-crawled robots files) uses the largest, matching
+    ``parse_crawl_delay_text``'s max-wins convention.
 
         fetch_at_ms = (rank_within_host - 1) * delay_millis
 
@@ -124,7 +126,9 @@ def schedule_fetches(
 
     out = frontier
     if delays is not None:
-        out = out.join(delays.select("host", "delay_millis"), "host", "left")
+        # one row per host before the join: several would fan out the frontier
+        per_host = delays.groupBy("host").agg(F.max("delay_millis").alias("delay_millis"))
+        out = out.join(per_host, "host", "left")
     else:
         out = out.withColumn("delay_millis", F.lit(None).cast("long"))
     w = Window.partitionBy("host").orderBy(F.desc("priority"), F.asc("url"))

@@ -13,9 +13,6 @@ equi-join + filter that reshuffles the corpus and re-tokenizes per
 pair). At 10^12 documents the blowup is bounded per row (mentions per
 sentence <= tens), never per partition, and the stage stays narrow —
 pipelined straight from the mention stage.
-
-``generate_pairs_selfjoin`` keeps the join formulation for reference/
-comparison (used in plan tests to show the explain difference).
 """
 
 from __future__ import annotations
@@ -26,7 +23,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from ..functions import tokenizer
 
@@ -209,34 +205,3 @@ def generate_pairs(mentions: DataFrame, sentences: DataFrame) -> DataFrame:
     )
     return generate_pairs_from_arrays(arr)
 
-
-def generate_pairs_selfjoin(mentions: DataFrame, sentences: DataFrame) -> DataFrame:
-    """The theta-self-join formulation (kept for plan comparison; the
-    array-local path above produces identical rows without the shuffle)."""
-
-    @pandas_udf(T.StringType())
-    def _mark_udf(sentence: pd.Series, b1: pd.Series, e1: pd.Series, b2: pd.Series, e2: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                _mark_tokens(tokenizer.tokenize(s, pad=False), int(a), int(b), int(c), int(d))
-                for s, a, b, c, d in zip(sentence, b1, e1, b2, e2)
-            ]
-        )
-
-    a = mentions.select(
-        "url", "sent_id",
-        F.col("begin").alias("b1"), F.col("end").alias("e1"), F.col("surface").alias("e1_surface"),
-    )
-    b = mentions.select(
-        "url", "sent_id",
-        F.col("begin").alias("b2"), F.col("end").alias("e2"), F.col("surface").alias("e2_surface"),
-    )
-    pairs = a.join(b, on=["url", "sent_id"]).filter(F.col("b1") < F.col("b2"))
-    pairs = pairs.join(sentences.select("url", "sent_id", "sentence"), on=["url", "sent_id"])
-    return pairs.select(
-        "url",
-        "sent_id",
-        F.col("e1_surface").alias("e1"),
-        F.col("e2_surface").alias("e2"),
-        _mark_udf("sentence", "b1", "e1", "b2", "e2").alias("marked_sentence"),
-    )

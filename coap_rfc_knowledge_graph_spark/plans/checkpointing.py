@@ -11,10 +11,19 @@ metrics". Every pipeline stage writes its output table plus a manifest:
 A stage is COMPLETE iff its manifest exists and carries ``complete``;
 the manifest is written AFTER the parquet commit (write-then-publish),
 so a crash mid-stage leaves no manifest and the stage re-runs cleanly
-from its (complete) inputs. Resume = skip every complete stage and
-rebuild the rest from the stored inputs — exactly the pickle-per-stage
-hand-off of the reference (``src/entity_extractor.py:61-62`` et al.)
-upgraded to audited, partition-aware table snapshots.
+from its (complete) inputs — the reference's pickle-per-stage hand-off
+(``src/entity_extractor.py:61-62`` et al.) as audited table snapshots.
+
+Stages are declared (:class:`Stage`) and run by one loop
+(:func:`run_stages`). A stage's IDENTITY is a digest of its params, the
+``table_hash`` of each upstream stage and the :func:`file_digest` of
+each source path it reads (empty for an in-memory source DataFrame). A
+complete stage is reused iff its manifest carries the same identity, so
+a re-run with different flags or rewritten input tables recomputes
+exactly the stages whose params, source files or upstream content
+changed. Partition counts and the application name are not part of
+identity: output content does not depend on them, and a killed job may
+resume at a different parallelism.
 
 In production these directories are Iceberg tables and the manifest
 content lives in snapshot summary metadata; the layout here is plain
@@ -26,12 +35,41 @@ output tables (used by the kill/resume test).
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import time
+from collections.abc import Callable
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def file_digest(path: str | None) -> str:
+    """Content key of a source file or table directory: a digest of each
+    data file's (relative name, size, mtime_ns) — cheap at any table
+    size, and it changes on any rewrite, in place or not. Empty for no
+    path (an in-memory source)."""
+    if not path:
+        return ""
+    entries = []
+    if os.path.isdir(path):
+        for root, _, files in os.walk(path):
+            for f in files:
+                p = os.path.join(root, f)
+                st = os.stat(p)
+                entries.append(f"{os.path.relpath(p, path)}\x1f{st.st_size}\x1f{st.st_mtime_ns}")
+    else:
+        st = os.stat(path)
+        entries.append(f".\x1f{st.st_size}\x1f{st.st_mtime_ns}")
+    return hashlib.sha256("\x1e".join(sorted(entries)).encode()).hexdigest()
+
+
+def stage_identity(params: dict | None, inputs: dict) -> str:
+    """Digest of a stage's params and its inputs' content keys."""
+    blob = json.dumps({"params": params, "inputs": sorted(inputs.items())}, sort_keys=True, default=str)
+    return hashlib.sha256(blob.encode()).hexdigest()
 
 
 class StageStore:
@@ -47,25 +85,12 @@ class StageStore:
     def manifest_path(self, stage: str) -> str:
         return os.path.join(self._dir(stage), "manifest.json")
 
-    def has(self, stage: str, params: dict | None = None) -> bool:
-        """True iff the stage committed completely — and, when ``params``
-        is given, was produced under the SAME parameters. A stage whose
-        output depends on run configuration (curation flags, blocklist
-        content) must pass its params here AND to :meth:`write`;
-        otherwise resuming with different flags would silently reuse the
-        stale snapshot (e.g. --pii-redact added after a --clean run
-        would never mask anything)."""
-        p = self.manifest_path(stage)
-        if not os.path.exists(p):
-            return False
+    def has(self, stage: str) -> bool:
+        """True iff the stage committed completely (current or not)."""
         try:
-            with open(p) as fh:
-                m = json.load(fh)
+            return bool(self.manifest(stage).get("complete"))
         except (OSError, json.JSONDecodeError):
             return False
-        if not m.get("complete"):
-            return False
-        return params is None or m.get("params") == params
 
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
         return spark.read.parquet(os.path.join(self._dir(stage), "data"))
@@ -78,26 +103,24 @@ class StageStore:
         self,
         df: DataFrame,
         stage: str,
-        inputs: list[str] | None = None,
-        partition_by: str | None = None,
+        inputs: list[str] | dict | None = None,
         params: dict | None = None,
     ) -> DataFrame:
         """Materialize ``df`` as the stage output; publish the manifest
-        last. Returns the re-read DataFrame (so downstream stages consume
-        the committed snapshot, not the live lineage)."""
+        last, with ``params`` and the :func:`stage_identity` of ``params``
+        and ``inputs`` (names, or names mapped to content keys). Returns
+        the re-read DataFrame (so downstream stages consume the committed
+        snapshot, not the live lineage)."""
+        keys = dict(inputs) if isinstance(inputs, dict) else dict.fromkeys(inputs or [])
         data_dir = os.path.join(self._dir(stage), "data")
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
         t0 = time.time()
-        writer.parquet(data_dir)
+        df.write.mode("overwrite").parquet(data_dir)
         compute_sec = time.time() - t0  # plan execution + parquet commit
 
         spark = df.sparkSession
         committed = spark.read.parquet(data_dir)
-        cols = [c for c in committed.columns]
         hashed = committed.withColumn("__pid", F.spark_partition_id()).withColumn(
-            "__h", F.xxhash64(*[F.col(c).cast("string") for c in cols])
+            "__h", F.xxhash64(*[F.col(c).cast("string") for c in committed.columns])
         )
         stats = (
             hashed.groupBy("__pid")
@@ -115,8 +138,9 @@ class StageStore:
         ]
         manifest = {
             "stage": stage,
-            "inputs": inputs or [],
+            "inputs": list(keys),
             "params": params,
+            "identity": stage_identity(params, keys),
             "schema": committed.schema.simpleString(),
             "row_count": sum(p["rows"] for p in partitions),
             # order- AND partitioning-insensitive multiset digest
@@ -135,9 +159,113 @@ class StageStore:
         return committed
 
 
-# --- resumable pipeline -------------------------------------------------------
+# --- declared stages + the one runner ----------------------------------------
 
-STAGES = ["sentences", "mentions", "triples", "entities", "rules", "edges", "contradictions"]
+
+@dataclass(frozen=True)
+class Stage:
+    """One resumable stage: ``build(**inputs, **params)`` returns its
+    output, so all it reads besides its closure is in its identity."""
+
+    name: str
+    inputs: tuple[str, ...]
+    build: Callable[..., DataFrame]
+    params: dict = field(default_factory=dict)
+
+
+@dataclass(frozen=True)
+class Source:
+    """An input from outside the store, keyed by ``path`` (None when in
+    memory). Builds receive ``load()`` (called once), else the path."""
+
+    path: str | None
+    load: Callable[[], object] | None = None
+
+
+def run_stages(
+    spark: SparkSession,
+    store: StageStore,
+    stages: list[Stage],
+    sources: dict[str, Source],
+    fail_after: str | None = None,
+) -> Callable[[str], object]:
+    """Run ``stages`` in order: skip each complete stage whose identity
+    is unchanged (decided from manifests and file stats alone), build and
+    commit the rest, reading inputs only when a build needs them.
+    ``fail_after`` crashes after the named stage commits (the kill/resume
+    test hook). Returns ``get(name)``: a stage's or source's value."""
+    digests = {name: file_digest(src.path) for name, src in sources.items()}
+    values: dict[str, object] = {}
+
+    def get(name: str):
+        if name not in values:
+            src = sources.get(name)
+            if src is None:
+                values[name] = store.read(spark, name)
+            else:
+                values[name] = src.load() if src.load else src.path
+        return values[name]
+
+    for stage in stages:
+        keys = {n: digests[n] if n in sources else store.manifest(n)["table_hash"] for n in stage.inputs}
+        identity = stage_identity(stage.params, keys)
+        if store.has(stage.name) and store.manifest(stage.name).get("identity") == identity:
+            continue
+        df = stage.build(**{n: get(n) for n in stage.inputs}, **stage.params)
+        values[stage.name] = store.write(df, stage.name, inputs=keys, params=stage.params)
+        if fail_after == stage.name:
+            raise RuntimeError(f"injected failure after stage {stage.name!r}")
+    return get
+
+
+def kg_stages(pages: str, url_partitions: int | None) -> list[Stage]:
+    """The seven KG stages over the pages input named ``pages``. Operator
+    imports stay inside the builds: a function patched on its module at
+    run time is the one called."""
+
+    def sentences(**inputs):
+        from ..operators.sentences import extract_sentences
+        return extract_sentences(inputs[pages], url_partitions=url_partitions)
+
+    def mentions(sentences):
+        from ..operators.mentions import extract_mentions
+        return extract_mentions(sentences, explode=False)
+
+    def triples(mentions):
+        from ..operators.relations import extract_triples_from_arrays
+        return extract_triples_from_arrays(mentions)
+
+    def entities(mentions):
+        from ..operators.linking import canonical_entities
+        from ..operators.mentions import _explode_mentions
+        return canonical_entities(_explode_mentions(mentions))  # explode_outer: no UDF re-eval
+
+    def rules(sentences, mentions, entities):
+        from ..operators.mentions import _explode_mentions
+        from ..operators.rule_filter import rule_sentences
+        from .pipeline import KGResult, rules_stage
+
+        res = KGResult(sentences=sentences, rule_sentences=rule_sentences(sentences),
+                       mentions=_explode_mentions(mentions), triples=None, entities=entities)
+        return rules_stage(res).rules  # which does not read triples
+
+    def edges(rules):
+        from ..operators.rules import build_edges
+        return build_edges(rules)
+
+    def contradictions(rules):
+        from ..operators.contradictions import check_entity_contradiction
+        return check_entity_contradiction(rules)
+
+    return [
+        Stage("sentences", (pages,), sentences),
+        Stage("mentions", ("sentences",), mentions),
+        Stage("triples", ("mentions",), triples),
+        Stage("entities", ("mentions",), entities),
+        Stage("rules", ("sentences", "mentions", "entities"), rules),
+        Stage("edges", ("rules",), edges),
+        Stage("contradictions", ("rules",), contradictions),
+    ]
 
 
 def run_resumable(
@@ -147,49 +275,9 @@ def run_resumable(
     url_partitions: int | None = None,
     fail_after: str | None = None,
 ) -> StageStore:
-    """Run the KG pipeline writing each stage through the StageStore;
-    stages whose manifests are complete are SKIPPED (their committed
-    parquet feeds downstream). ``fail_after`` injects a crash after the
-    named stage commits — the kill/resume test hook."""
-    from ..operators.contradictions import check_entity_contradiction
-    from ..operators.linking import canonical_entities, link_surfaces
-    from ..operators.mentions import extract_mentions
-    from ..operators.relations import extract_triples_from_arrays
-    from ..operators.rule_filter import rule_sentences
-    from ..operators.rules import build_edges
-    from ..operators.sentences import extract_sentences
-
+    """The KG stages over the in-memory ``pages``, resumable in the
+    StageStore at ``root`` (see :func:`run_stages`)."""
     store = StageStore(root)
-
-    def stage(name: str, build, inputs: list[str]):
-        if store.has(name):
-            return store.read(spark, name)
-        out = store.write(build(), name, inputs=inputs)
-        if fail_after == name:
-            raise RuntimeError(f"injected failure after stage {name!r}")
-        return out
-
-    sentences = stage("sentences", lambda: extract_sentences(pages, url_partitions=url_partitions), ["pages"])
-    mentions_arr = stage("mentions", lambda: extract_mentions(sentences, explode=False), ["sentences"])
-    triples = stage("triples", lambda: extract_triples_from_arrays(mentions_arr), ["mentions"])
-    from ..operators.mentions import _explode_mentions
-
-    mentions = _explode_mentions(mentions_arr)  # explode_outer: no UDF re-eval
-    entities = stage("entities", lambda: canonical_entities(mentions), ["mentions"])
-
-    def build_rules_df():
-        from .pipeline import KGResult, rules_stage
-
-        res = KGResult(
-            sentences=sentences,
-            rule_sentences=rule_sentences(sentences),
-            mentions=mentions,
-            triples=triples,
-            entities=entities,
-        )
-        return rules_stage(res).rules
-
-    rules = stage("rules", build_rules_df, ["sentences", "mentions", "entities"])
-    stage("edges", lambda: build_edges(rules), ["rules"])
-    stage("contradictions", lambda: check_entity_contradiction(rules), ["rules"])
+    sources = {"pages": Source(None, lambda: pages)}
+    run_stages(spark, store, kg_stages("pages", url_partitions), sources, fail_after)
     return store

@@ -281,9 +281,13 @@ def write_wet(
     Filenames are partition-id-derived, so a retried task OVERWRITES
     its own file rather than duplicating records — idempotent locally;
     a production object-store deployment fronts this with the usual
-    temp-name + commit rename. ``out_dir`` must be a filesystem every
-    executor can reach (shared mount / fuse'd object store) — each
-    task creates it and writes its own segment with plain file IO;
+    temp-name + commit rename. Segment files of an earlier export into
+    ``out_dir`` are deleted when this is called, so after the action the
+    directory holds exactly the manifest's files even when the earlier
+    export had more (or now-empty) partitions. ``out_dir`` must be a
+    filesystem the driver and every executor can reach (shared mount /
+    fuse'd object store) — each task creates it and writes its own
+    segment with plain file IO;
     records stream to disk as they are framed, so executor memory
     stays O(one record), not O(segment).
 
@@ -298,6 +302,9 @@ def write_wet(
 
     tz = pages.sparkSession.conf.get("spark.sql.session.timeZone", "UTC")
     ext = ".warc.wet.gz" if compress else ".warc.wet"
+    for name in os.listdir(out_dir) if os.path.isdir(out_dir) else []:
+        if name.startswith("part-") and ".warc.wet" in name:
+            os.remove(os.path.join(out_dir, name))
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext

@@ -2,11 +2,18 @@
 
     spark-submit --py-files dist/coap_rfc_knowledge_graph_spark.zip \\
         jobs/run_pipeline.py --pages <parquet path> --out <state root> \\
-        [--url-partitions N] [--resume]
+        [--url-partitions N] [--resume] [pre-pass and crawl-stage flags]
 
-Reads the pages table, runs extract -> rules -> contradiction stages,
-writing each through the lineage-manifest StageStore (resume skips
-complete stages; see plans/checkpointing.py).
+Runs the declared stages (``job_stages``: optional crawl stages,
+curated_pages when a pre-pass flag is set, the seven KG stages) through
+the lineage-manifest StageStore (plans/checkpointing.py). A stage is
+reused iff its params, the files it reads (--pages, --robots,
+--domain-blocklist, --decontaminate, --lm-reference, --delta-against)
+and its upstream stages' content are unchanged, so a re-run into the
+same --out with other flags or rewritten inputs recomputes exactly the
+dependent stages. --url-partitions and --app-name are not part of
+identity: output content does not depend on them, and a killed run may
+resume at another parallelism.
 """
 
 from __future__ import annotations
@@ -23,8 +30,8 @@ def main() -> None:
     ap.add_argument(
         "--resume",
         action="store_true",
-        help="accepted for explicitness; resume is automatic — complete "
-        "stages are skipped via their lineage manifests either way",
+        help="accepted for explicitness; resume is automatic — a stage "
+        "whose identity is unchanged is skipped via its manifest either way",
     )
     ap.add_argument(
         "--from-warc",
@@ -232,217 +239,119 @@ def main() -> None:
         ap.error("--substring-dedup MIN_SPAN must be >= 1")
     if args.lm_reference and args.lm_select_permille is None:
         ap.error("--lm-reference requires --lm-select-permille")
+    if args.host_ranks is not None and args.host_ranks < 1:
+        ap.error("--host-ranks ITERS must be >= 1")
+    if args.frontier is not None and args.frontier < 1:
+        ap.error("--frontier K must be >= 1")
 
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
-    from coap_rfc_knowledge_graph_spark.plans.checkpointing import run_resumable
+    from coap_rfc_knowledge_graph_spark.plans.checkpointing import Source, StageStore, run_stages
+    from coap_rfc_knowledge_graph_spark.sources import warc
 
     # under spark-submit there is no session yet and we own the one we
     # create; when embedded (tests, notebooks) getOrCreate returns the
     # caller's session, which is not ours to stop
     owns_session = SparkSession.getActiveSession() is None
     spark = SparkSession.builder.appName(args.app_name).getOrCreate()
-    if args.from_warc:
-        from coap_rfc_knowledge_graph_spark.sources.warc import read_warc
 
-        pages = read_warc(spark, args.pages)
-    else:
-        pages = spark.read.parquet(args.pages)
+    def load_pages():
+        return warc.read_warc(spark, args.pages) if args.from_warc else spark.read.parquet(args.pages)
 
-    if args.host_ranks is not None and args.host_ranks < 1:
-        ap.error("--host-ranks ITERS must be >= 1")
-    if args.frontier is not None and args.frontier < 1:
-        ap.error("--frontier K must be >= 1")
-    if args.link_graph or args.host_ranks is not None or args.frontier is not None:
-        # from the RAW ingested pages: curation may rewrite text, but
-        # the link graph is a property of the crawl itself
-        from coap_rfc_knowledge_graph_spark.operators.html_extract import html_links
-        from coap_rfc_knowledge_graph_spark.plans.checkpointing import StageStore
-
-        lg_store = StageStore(args.out)
-        lg_params = {"link_graph": True, "from_warc": bool(args.from_warc)}
-        if not lg_store.has("link_graph", params=lg_params):
-            lg_store.write(html_links(pages), "link_graph", inputs=["pages"], params=lg_params)
-        if args.host_ranks is not None:
-            from coap_rfc_knowledge_graph_spark.operators.webgraph import (
-                host_graph,
-                pagerank_weighted,
-            )
-
-            hr_params = {"host_ranks": True, "iterations": args.host_ranks}
-            if not lg_store.has("host_ranks", params=hr_params):
-                hg = host_graph(lg_store.read(spark, "link_graph"))
-                ranks = pagerank_weighted(
-                    hg, iterations=args.host_ranks,
-                    src_col="src_host", dst_col="dst_host",
-                ).withColumnRenamed("node", "host")
-                lg_store.write(ranks, "host_ranks", inputs=["link_graph"], params=hr_params)
-        if args.frontier is not None:
-            from coap_rfc_knowledge_graph_spark.operators.frontier import crawl_frontier
-
-            # host_ranks iterations are part of the frontier's identity:
-            # a frontier computed from 2-iteration ranks must not be
-            # reused for a --host-ranks 50 run (StageStore compares
-            # params only — same convention as prepass digests)
-            fr_params = {
-                "frontier": True,
-                "k": args.frontier,
-                "with_ranks": args.host_ranks is not None,
-                "rank_iterations": args.host_ranks,
-                # scheduling folds Crawl-delay from the --robots table in;
-                # its presence changes the stage's columns and values
-                "scheduled": bool(args.robots),
-            }
-            if not lg_store.has("frontier", params=fr_params):
-                ranks = (
-                    lg_store.read(spark, "host_ranks")
-                    if args.host_ranks is not None
-                    else None
-                )
-                frontier = crawl_frontier(
-                    lg_store.read(spark, "link_graph"),
-                    pages.select("url"),
-                    ranks,
-                    k=args.frontier,
-                )
-                if args.robots:
-                    # politeness scheduling from the same robots table
-                    # the compliance gate reads: fetch_at_ms spaces each
-                    # host's fetches Crawl-delay apart in priority order
-                    from coap_rfc_knowledge_graph_spark.operators.frontier import (
-                        schedule_fetches,
-                    )
-                    from coap_rfc_knowledge_graph_spark.operators.robots import (
-                        parse_crawl_delays,
-                    )
-
-                    delays = parse_crawl_delays(spark.read.parquet(args.robots))
-                    frontier = schedule_fetches(frontier, delays)
-                lg_store.write(
-                    frontier,
-                    "frontier",
-                    inputs=["link_graph"] + (["host_ranks"] if ranks is not None else []),
-                    params=fr_params,
-                )
-
-    def apply_prepasses(pages):
-        return _apply_prepasses(spark, pages, args, F)
-
-    prepass_active = (
-        args.url_curation
-        or args.robots is not None
-        or args.canonical_collapse
-        or args.delta_against is not None
-        or args.html_extract
-        or args.normalize_unicode is not None
-        or args.clean
-        or args.decontaminate
-        or args.pii_redact
-        or args.paragraph_dedup
-        or args.line_dedup
-        or args.substring_dedup is not None
-        or args.lm_select_permille is not None
-    )
-    if prepass_active:
-        # the curation pre-passes run through the SAME lineage-manifest
-        # store as the extraction stages: at 100 TB a crashed curation
-        # pass must resume from its committed snapshot, not recompute.
-        # The snapshot is keyed on the prepass configuration (flags +
-        # blocklist content + eval-table path): resuming with DIFFERENT
-        # flags recomputes instead of silently reusing a stale snapshot
-        # (e.g. adding --pii-redact after a --clean run must re-mask).
-        import hashlib
-
-        from coap_rfc_knowledge_graph_spark.plans.checkpointing import StageStore
-
-        blocklist_digest = None
-        if args.domain_blocklist:
-            with open(args.domain_blocklist, "rb") as fh:
-                blocklist_digest = hashlib.sha256(fh.read()).hexdigest()
-        def _table_digest(path: str | None) -> str | None:
-            # content-key side-input tables like the blocklist: a table
-            # rewritten IN PLACE must recompute the snapshot, not
-            # silently reuse a stale one. Hashing data files'
-            # (name, size, mtime_ns) is cheap at any table size and
-            # changes on any rewrite.
-            if not path:
-                return None
-            import os
-
-            entries = []
-            if os.path.isdir(path):
-                for root, _, files in os.walk(path):
-                    for f in sorted(files):
-                        p = os.path.join(root, f)
-                        st = os.stat(p)
-                        entries.append(
-                            f"{os.path.relpath(p, path)}\x1f{st.st_size}\x1f{st.st_mtime_ns}"
-                        )
-            else:
-                st = os.stat(path)
-                entries.append(f".\x1f{st.st_size}\x1f{st.st_mtime_ns}")
-            return hashlib.sha256("\x1e".join(sorted(entries)).encode()).hexdigest()
-
-        lm_reference_digest = _table_digest(args.lm_reference)
-        prepass_params = {
-            "url_curation": bool(args.url_curation),
-            # from_warc changes the INPUT DATA, not just a transform:
-            # a parquet run and a WARC run of the same --out must not
-            # share a curated_pages snapshot
-            "from_warc": bool(args.from_warc),
-            "html_extract": bool(args.html_extract),
-            "normalize_unicode": args.normalize_unicode,
-            "domain_blocklist_sha256": blocklist_digest,
-            "head_cap_frac": args.head_cap_frac,
-            "cap_by_registered_domain": bool(args.cap_by_registered_domain),
-            "pii_redact": bool(args.pii_redact),
-            "paragraph_dedup": bool(args.paragraph_dedup),
-            "line_dedup": bool(args.line_dedup),
-            "substring_dedup": args.substring_dedup,
-            "clean": bool(args.clean),
-            "decontaminate": args.decontaminate,
-            "lm_select_permille": args.lm_select_permille,
-            "lm_reference": args.lm_reference,
-            "lm_reference_sha256": lm_reference_digest,
-            "robots": args.robots,
-            "robots_sha256": _table_digest(args.robots),
-            "canonical_collapse": bool(args.canonical_collapse),
-            "delta_against": args.delta_against,
-            "delta_against_sha256": _table_digest(args.delta_against),
-        }
-        store0 = StageStore(args.out)
-        if store0.has("curated_pages", params=prepass_params):
-            pages = store0.read(spark, "curated_pages")
-        else:
-            pages = store0.write(
-                apply_prepasses(pages), "curated_pages", inputs=["pages"], params=prepass_params
-            )
+    sources = {"pages": Source(args.pages, load_pages)}
+    sources.update({p: Source(getattr(args, p)) for p in PREPASS_PATHS if getattr(args, p)})
+    stages = job_stages(args)
+    store = StageStore(args.out)
+    get = run_stages(spark, store, stages, sources)
     if args.wet_out:
-        from pyspark.sql import functions as _F
+        from pyspark.sql import functions as F
 
-        from coap_rfc_knowledge_graph_spark.sources.warc import write_wet
-
-        wet_pages = pages
+        # the pages the KG stages read: curated when any pre-pass runs
+        wet_pages = get("curated_pages" if any(s.name == "curated_pages" for s in stages) else "pages")
         if "warc_ts" not in wet_pages.columns:
-            wet_pages = wet_pages.withColumn("warc_ts", _F.lit(None).cast("timestamp"))
-        manifest = write_wet(wet_pages, args.wet_out).collect()
+            wet_pages = wet_pages.withColumn("warc_ts", F.lit(None).cast("timestamp"))
+        manifest = warc.write_wet(wet_pages, args.wet_out).collect()
         n_rec = sum(r.n_records for r in manifest)
         n_files = sum(1 for r in manifest if r.path)
         print(f"wet_out: files={n_files} records={n_rec} dir={args.wet_out}")
-    store = run_resumable(spark, pages, args.out, url_partitions=args.url_partitions)
-    report = (["link_graph"] if args.link_graph else []) + (
-        ["host_ranks"] if args.host_ranks is not None else []
-    ) + (["frontier"] if args.frontier is not None else []) + (
-        ["curated_pages"] if prepass_active else []
-    ) + [
-        "sentences", "mentions", "triples", "entities", "rules", "edges", "contradictions",
-    ]
-    for stage in report:
-        m = store.manifest(stage)
-        print(f"{stage}: rows={m['row_count']} hash={m['table_hash']}")
+    for stage in stages:
+        m = store.manifest(stage.name)
+        print(f"{stage.name}: rows={m['row_count']} hash={m['table_hash']}")
     if owns_session:
         spark.stop()
+
+
+# the pre-pass flags; those naming a file or table are inputs of the
+# curated_pages stage, the rest its params
+PREPASS_FLAGS = (
+    "robots", "canonical_collapse", "delta_against", "url_curation", "domain_blocklist", "head_cap_frac",
+    "cap_by_registered_domain", "html_extract", "normalize_unicode", "pii_redact", "paragraph_dedup",
+    "line_dedup", "substring_dedup", "clean", "decontaminate", "lm_select_permille", "lm_reference",
+)
+PREPASS_PATHS = ("robots", "delta_against", "domain_blocklist", "decontaminate", "lm_reference")
+
+
+def job_stages(args) -> list:
+    """The job's stages, in run order: the optional crawl stages
+    (link_graph, host_ranks, frontier), curated_pages when any pre-pass
+    flag is set, then the seven KG stages over the (curated) pages."""
+    from coap_rfc_knowledge_graph_spark.plans.checkpointing import Stage, kg_stages
+
+    stages = []
+    if args.link_graph or args.host_ranks is not None or args.frontier is not None:
+        # from the RAW ingested pages: curation may rewrite text, but
+        # the link graph is a property of the crawl itself
+        stages.append(Stage("link_graph", ("pages",), _link_graph))
+    if args.host_ranks is not None:
+        stages.append(Stage("host_ranks", ("link_graph",), _host_ranks, {"iterations": args.host_ranks}))
+    if args.frontier is not None:
+        # ranked when --host-ranks runs; Crawl-delay-scheduled from the
+        # same robots table the compliance gate reads when --robots is given
+        inputs = ("link_graph", "pages") + ("host_ranks",) * (args.host_ranks is not None)
+        inputs += ("robots",) * bool(args.robots)
+        stages.append(Stage("frontier", inputs, _frontier, {"k": args.frontier}))
+    curating = any(getattr(args, f) not in (None, False) for f in PREPASS_FLAGS)
+    if curating:
+        # the curation pre-passes run through the SAME lineage-manifest
+        # store as the extraction stages: at 100 TB a crashed curation
+        # pass must resume from its committed snapshot, not recompute
+        params = {f: getattr(args, f) for f in PREPASS_FLAGS if f not in PREPASS_PATHS}
+        paths = tuple(p for p in PREPASS_PATHS if getattr(args, p))
+        stages.append(Stage("curated_pages", ("pages",) + paths, _curate, params))
+    return stages + kg_stages("curated_pages" if curating else "pages", args.url_partitions)
+
+
+def _link_graph(pages):
+    from coap_rfc_knowledge_graph_spark.operators.html_extract import html_links
+
+    return html_links(pages)
+
+
+def _host_ranks(link_graph, iterations):
+    from coap_rfc_knowledge_graph_spark.operators.webgraph import host_graph, pagerank_weighted
+
+    return pagerank_weighted(
+        host_graph(link_graph), iterations=iterations, src_col="src_host", dst_col="dst_host"
+    ).withColumnRenamed("node", "host")
+
+
+def _frontier(link_graph, pages, k, host_ranks=None, robots=None):
+    from coap_rfc_knowledge_graph_spark.operators.frontier import crawl_frontier, schedule_fetches
+    from coap_rfc_knowledge_graph_spark.operators.robots import parse_crawl_delays
+
+    frontier = crawl_frontier(link_graph, pages.select("url"), host_ranks, k=k)
+    if robots is None:
+        return frontier
+    # politeness scheduling: fetch_at_ms spaces each host's fetches
+    # Crawl-delay apart in priority order
+    return schedule_fetches(frontier, parse_crawl_delays(pages.sparkSession.read.parquet(robots)))
+
+
+def _curate(pages, **flags):
+    from pyspark.sql import functions as F
+
+    args = argparse.Namespace(**{**dict.fromkeys(PREPASS_PATHS), **flags})
+    return _apply_prepasses(pages.sparkSession, pages, args, F)
 
 
 def _apply_prepasses(spark, pages, args, F):

@@ -84,23 +84,29 @@ def test_job_frontier_stage(spark, tmp_path):
     sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs"))
     import run_pipeline
 
-    old = sys.argv
-    try:
-        sys.argv = ["run_pipeline.py", "--pages", src, "--out", out,
-                    "--frontier", "3", "--host-ranks", "2"]
-        run_pipeline.main()
-    finally:
-        sys.argv = old
+    def run(*flags):
+        old = sys.argv
+        try:
+            sys.argv = ["run_pipeline.py", "--pages", src, "--out", out, "--frontier", "3", *flags]
+            run_pipeline.main()
+        finally:
+            sys.argv = old
+
     from coap_rfc_knowledge_graph_spark.plans.checkpointing import StageStore
 
+    run("--host-ranks", "2")
     store = StageStore(out)
-    fr_params = {"frontier": True, "k": 3, "with_ranks": True,
-                 "rank_iterations": 2, "scheduled": False}
-    assert store.has("frontier", params=fr_params)
-    # the rank iteration count is part of the stage identity: a frontier
-    # built from different host_ranks must not be reused
-    assert not store.has("frontier", params={**fr_params, "rank_iterations": 50})
+    assert store.has("frontier")
+    m = store.manifest("frontier")
+    assert m["inputs"] == ["link_graph", "pages", "host_ranks"] and m["params"] == {"k": 3}
     got = store.read(spark, "frontier").collect()
+    # the host ranks' content is part of the frontier's identity: a
+    # frontier built from different host_ranks must not be reused
+    link_graph = store.manifest("link_graph")
+    run("--host-ranks", "50")
+    assert store.manifest("link_graph")["written_at"] == link_graph["written_at"]
+    assert store.manifest("host_ranks")["params"] == {"iterations": 50}
+    assert store.manifest("frontier")["written_at"] != m["written_at"]
     # peer links point at crawled pages (excluded); all 8 c.example
     # leaves tie on inlinks (3 each), shallow beats deep via -depth,
     # and the url-asc tiebreak picks new0..new2 of the 4 shallow ones
@@ -171,6 +177,26 @@ def test_schedule_fetches(spark):
     assert (got["https://b.example/1"].delay_millis,
             got["https://b.example/1"].fetch_at_ms) == (700, 0)
 
+
+def test_schedule_fetches_host_with_two_robots_rows(spark):
+    """A robots table with two files for one host (a re-crawl) must not
+    fan out the frontier: the host keeps one row per url, spaced by the
+    larger Crawl-delay."""
+    from coap_rfc_knowledge_graph_spark.operators.frontier import schedule_fetches
+    from coap_rfc_knowledge_graph_spark.operators.robots import parse_crawl_delays
+
+    frontier = spark.createDataFrame(
+        [("a.example", f"https://a.example/{i}", 10 - i) for i in range(3)],
+        "host string, url string, priority long",
+    )
+    robots = spark.createDataFrame(
+        [("a.example", b"User-agent: *\nCrawl-delay: 1\n"),
+         ("a.example", b"User-agent: *\nCrawl-delay: 2.5\n")],
+        "host string, payload binary",
+    )
+    got = sorted((r.url, r.delay_millis, r.fetch_at_ms)
+                 for r in schedule_fetches(frontier, parse_crawl_delays(robots)).collect())
+    assert got == [(f"https://a.example/{i}", 2500, 2500 * i) for i in range(3)]
 
 def test_zip_with_rank_per_key_equals_naive_window(spark):
     """Per-key dense rank without a per-key window: exactly the naive

@@ -134,7 +134,8 @@ def test_job_prepass_runs_through_stage_store(spark, tmp_path):
         sys.argv = ["run_pipeline.py", "--pages", src, "--out", out, "--clean"]
         run_pipeline.main()
         m2 = store.manifest("curated_pages")
-        assert m2["written_at"] != written_at and m2["params"]["pii_redact"] is False
+        assert m2["written_at"] != written_at and m2["identity"] != m1["identity"]
+        assert m2["params"]["pii_redact"] is False
         snap2 = store.read(spark, "curated_pages")
         assert snap2.filter(snap2.text.contains("@")).count() > 0
     finally:

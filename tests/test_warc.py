@@ -323,6 +323,20 @@ def test_write_wet_uncompressed_and_empty_partitions(spark, tmp_path):
     assert parse_warc(data, record_types=("conversion",))[0][2] == b"t"
 
 
+def test_write_wet_rerun_leaves_no_stale_segments(spark, tmp_path):
+    """Re-exporting into a used out_dir with fewer partitions, one of
+    them now empty, leaves exactly the returned manifest's files."""
+    from coap_rfc_knowledge_graph_spark.sources.warc import write_wet
+
+    rows = [(f"https://a.example/{i}", datetime(2024, 1, 1, tzinfo=timezone.utc), f"t{i}") for i in range(8)]
+    pages = spark.createDataFrame(rows, "url string, warc_ts timestamp, text string")
+    out = str(tmp_path / "wet")
+    first = write_wet(pages.repartition(8), out).collect()
+    assert len(os.listdir(out)) == sum(1 for r in first if r.path) > 2
+    manifest = write_wet(pages.limit(1).repartition(2), out).collect()
+    assert len(manifest) == 2 and sum(r.n_records for r in manifest) == 1
+    assert sorted(os.listdir(out)) == sorted(os.path.basename(r.path) for r in manifest if r.path)
+
 def test_job_wet_out(spark, tmp_path):
     """--wet-out exports the curated pages as WET segment files the
     repo's own parser reads back."""
